@@ -280,7 +280,15 @@ def _closure_topological(tables, edges, seed_table, seed_df, *,
     pushdown via analysis-time cache substitution, but 2.84→7.2 s at 32c);
     a single eager seed checkpoint (0.80× at 32c but 1.8× WORSE at 8c —
     the ExistingRDD seed loses parquet stats and the barrier serializes
-    the saturated box).  The lazy shape — auto-BHJ everywhere, redundancy
+    the saturated box).  Narrow per-table kept-key sets, one semi-join of
+    each full table against its own set, measured on the lifecycle
+    benchmark (seed-subset, sf0.003) and on the gates (sf0.1, local[4]):
+    eager sets (localCheckpoint) and lazy ones (persist) both cut the
+    dump's input records 242.6k → 66.8k but gave no op-time gain once the
+    table writes run concurrently, and both slowed the single-action
+    subset_parent_closure / subset_full_closure gates (warm-min
+    0.58 → 0.78 s and 1.36 → 1.84 s eager, 0.79 s and 1.59 s lazy).
+    The lazy shape — auto-BHJ everywhere, redundancy
     absorbed by parallel broadcast jobs — remains the best measured shape;
     the scale-correct fix is write-time layout (narrow per-table key-set
     sidecars written by the dump path for later closures to semi-join

@@ -23,7 +23,7 @@ from ..config import Config
 from ..functions.transformers import apply_transformers
 from ..operators.sample import hash_percent_filter, systematic_percent
 from ..operators.subset import FkEdge, subset_closure
-from ..sinks.datastore import Datastore, DumpInfo
+from ..sinks.datastore import Datastore, DumpInfo, for_each_table
 
 
 def _parse_uri(uri: str) -> tuple[str, str]:
@@ -162,9 +162,11 @@ class RestorePipeline:
         )
         scheme, path = _parse_uri(self.config.destination.connection_uri)
         mode = "overwrite" if self.config.destination.wipe_database else "append"
+        # file destinations write their tables concurrently, like the dump;
+        # JDBC and docker destinations keep table order for FK constraints
         if scheme == "parquet":
-            for t, df in tables.items():
-                df.write.mode(mode).parquet(f"{path.rstrip('/')}/{t}")
+            for_each_table(spark, tables, lambda t, df: df.write.mode(mode)
+                           .parquet(f"{path.rstrip('/')}/{t}"))
         elif scheme in ("postgres", "postgresql", "mysql", "jdbc"):
             from ..sources.jdbc import write_jdbc_tables
 
@@ -173,15 +175,15 @@ class RestorePipeline:
         elif scheme == "sqltext":
             from ..sinks.sqldump_sink import write_sql_dump
 
-            for t, df in tables.items():
-                # honor wipe_database=false like every other destination
-                write_sql_dump(df, t, f"{path.rstrip('/')}/{t}", mode=mode)
+            # honor wipe_database=false like every other destination
+            for_each_table(spark, tables, lambda t, df: write_sql_dump(
+                df, t, f"{path.rstrip('/')}/{t}", mode=mode))
         elif scheme == "jsonl":
             # MongoDB-shaped destination (reference K3): JSON-lines per table
             # (mongoimport-compatible), gzip-compressed part files
-            for t, df in tables.items():
-                (df.write.mode(mode).option("compression", "gzip")
-                 .json(f"{path.rstrip('/')}/{t}"))
+            for_each_table(spark, tables, lambda t, df: (
+                df.write.mode(mode).option("compression", "gzip")
+                .json(f"{path.rstrip('/')}/{t}")))
         elif scheme == "console":
             # reference stdout sink (destination/generic_stdout.rs:98-104)
             for t, df in tables.items():

@@ -35,8 +35,12 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
+from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,6 +69,34 @@ class DumpInfo:
     # every row.  Empty on manifests written before round 5 (legacy
     # incremental chains keep the old union behavior).
     full_tables: list = field(default_factory=list)
+
+
+def for_each_table(spark: SparkSession, tables: dict[str, DataFrame],
+                   write: Callable[[str, DataFrame], None]) -> None:
+    """Call ``write(table, df)`` for every table, concurrently, from a pool
+    of ``min(len(tables), defaultParallelism)`` threads; re-raise the first
+    failure in table order once every write has ended.
+
+    Each call gets its own ``inheritable_thread_target`` wrap, which clones
+    the caller's Spark local properties: one wrap shared by all calls
+    hands every thread the same Properties object, and a bare pool thread
+    gets none (its jobs lose the caller's job group).
+    """
+    if not tables:
+        return
+
+    def inheriting(fn):
+        wrap = inheritable_thread_target(spark)
+        # pinned-thread mode off (PYSPARK_PIN_THREAD=false): pyspark hands
+        # the session back unwrapped, and threads have no own properties
+        return fn if wrap is spark else wrap(fn)
+
+    workers = min(len(tables), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheriting(write), t, df)
+                   for t, df in tables.items()]
+        for f in futures:
+            f.result()
 
 
 class Datastore:
@@ -224,11 +256,21 @@ class Datastore:
         max_records_per_file: int = 1_000_000,
         partition_by: dict[str, list[str]] | None = None,
         watermark_cols: dict[str, str] | None = None,
-        parallel: int = 1,
         _parent: str | None = None,
         _full_tables: list[str] | None = None,
     ) -> DumpInfo:
         """Write one dump: per-table Parquet + manifest entry.
+
+        The table writes run concurrently, from a pool of
+        ``min(len(tables), defaultParallelism)`` threads
+        (:func:`for_each_table`), so Spark fills the cores that one small
+        table's write leaves idle.  Each write carries its own copy of the
+        caller's Spark local properties (job group, description): the
+        write's SQL execution id is one of them, and writes sharing one
+        copy overwrite each other's id.
+
+        An unnamed dump gets ``dump-<epoch ms>-<8 hex chars>``, so dumps
+        started in the same second no longer overwrite each other.
 
         `encrypt_columns` maps table → string columns to AES-GCM-encrypt
         (stored as base64; random IV per value via Spark's aes_encrypt).
@@ -239,25 +281,25 @@ class Datastore:
         `watermark_cols` maps table → a monotonically-increasing column;
         the manifest records each table's max value so later
         :meth:`dump_incremental` calls write only newer rows.
-        `parallel` > 1 submits up to that many table writes concurrently —
-        Spark's scheduler interleaves the jobs, so small tables no longer
-        serialize behind big ones (a many-table dump is otherwise
-        driver-submission-bound).
         """
         self.init()
-        name = name or f"dump-{int(time.time())}"
+        name = name or (f"dump-{time.time_ns() // 1_000_000}-"
+                        f"{uuid.uuid4().hex[:8]}")
         dump_dir = self._join(name)
         key = _normalize_key(encryption_key) if encryption_key else None
-        enc_types: dict[str, dict[str, str]] = {}
+        if not key and set(encrypt_columns or ()) & set(tables):
+            raise ValueError("encrypt_columns given without encryption_key")
+        # read on the caller's thread: the writes below run concurrently
+        enc_types = {t: {c: tables[t].schema[c].dataType.simpleString()
+                         for c in cols}
+                     for t, cols in (encrypt_columns or {}).items()
+                     if t in tables and cols}
 
         def write_one(t: str, df: DataFrame) -> None:
             if encrypt_columns and t in encrypt_columns:
-                if not key:
-                    raise ValueError("encrypt_columns given without encryption_key")
                 for c in encrypt_columns[t]:
                     # Column-arg form (not f-string SQL): keys with quotes are
                     # safe, and the key never rides inside a SQL text fragment.
-                    enc_types.setdefault(t, {})[c] = df.schema[c].dataType.simpleString()
                     df = df.withColumn(
                         c, F.base64(F.aes_encrypt(
                             F.col(c).cast("string"), F.lit(key), F.lit("GCM")))
@@ -270,17 +312,7 @@ class Datastore:
                 writer = writer.partitionBy(*partition_by[t])
             writer.parquet(f"{dump_dir}/{t}")
 
-        if parallel > 1 and len(tables) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=parallel) as pool:
-                futures = [pool.submit(write_one, t, df)
-                           for t, df in tables.items()]
-                for f in futures:
-                    f.result()
-        else:
-            for t, df in tables.items():
-                write_one(t, df)
+        for_each_table(self.spark, tables, write_one)
         watermarks = {}
         if watermark_cols:
             for t, wc in watermark_cols.items():

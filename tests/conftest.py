@@ -17,11 +17,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 def pytest_configure(config):
     config.addinivalue_line(
-        "markers", "slow: multi-minute test, opt-in via SPARK_GRAFT_SLOW_TESTS=1")
+        "markers", "slow: multi-minute test, opt-in via SPARK_GRAFT_SLOW_TESTS=1 "
+        "or -m slow")
 
 
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
+    # a -m expression naming slow decides itself: `-m slow` runs them,
+    # `-m 'not slow'` deselects them
+    if (os.environ.get("SPARK_GRAFT_SLOW_TESTS")
+            or "slow" in (config.getoption("-m") or "")):
         return
     skip = pytest.mark.skip(
         reason="multi-minute test; set SPARK_GRAFT_SLOW_TESTS=1 to include")

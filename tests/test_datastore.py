@@ -212,11 +212,93 @@ def test_parallel_dump_writes_equal_serial(spark, sf_dir, tmp_path):
 
     tables = load_tables(spark, sf_dir, ["region", "nation", "supplier"])
     store = Datastore(spark, str(tmp_path / "par"))
-    info = store.dump(tables, "p1", parallel=3)
+    info = store.dump(tables, "p1")
     assert sorted(info.tables) == ["nation", "region", "supplier"]
     back = store.restore("p1")
     for t, df in tables.items():
         assert back[t].count() == df.count()
+
+
+def test_concurrent_writes_keep_job_group_and_own_execution(
+        spark, sf_dir, tmp_path):
+    """The concurrent table writes run in pool threads.  Every job they
+    submit must carry the caller's job group, and each table's write must
+    be its own SQL execution whose jobs no other table's execution claims.
+    A bare pool thread drops the job group; one property set shared by
+    all pool threads lets the writes overwrite each other's execution id."""
+    import re
+
+    from replibyte_spark.catalog import load_tables
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tables = load_tables(spark, sf_dir, ["region", "nation", "supplier"])
+    store = Datastore(spark, str(tmp_path / "attr"))
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        return {int(j.jobId()) for j in
+                spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+                    jsc.statusStore().jobsList(None))}
+
+    before = job_ids()
+    group = "datastore-attribution-test"
+    sc.setJobGroup(group, "concurrent dump")
+    try:
+        store.dump(tables, "a1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new = job_ids() - before
+    assert new, "the dump submitted no jobs"
+    assert new <= set(sc.statusTracker().getJobIdsForGroup(group))
+
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    sql = spark._jsparkSession.sharedState().statusStore()
+    per_table: dict[str, list[set]] = {t: [] for t in tables}
+    for e in conv.asJava(sql.executionsList()):
+        jobs = {int(k) for k in conv.asJava(e.jobs()).keySet()}
+        if not jobs & new:
+            continue
+        plan = e.physicalPlanDescription()
+        for t in tables:
+            if re.search(rf"/a1/{t}\b", plan):
+                per_table[t].append(jobs)
+    for t, execs in per_table.items():
+        assert len(execs) == 1, (t, execs)
+        assert execs[0] and execs[0] <= new, (t, execs)
+    owned = [execs[0] for execs in per_table.values()]
+    assert sum(map(len, owned)) == len(set().union(*owned)), per_table
+
+
+def test_dump_without_pinned_thread_mode(spark, sf_dir, tmp_path,
+                                        monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, pyspark's inheritable_thread_target
+    returns the session it was given instead of a wrapper; the dump must
+    still write every table."""
+    import replibyte_spark.sinks.datastore as DS
+    from replibyte_spark.catalog import load_tables
+
+    monkeypatch.setattr(DS, "inheritable_thread_target", lambda f: f)
+    tables = load_tables(spark, sf_dir, ["region", "nation"])
+    store = Datastore(spark, str(tmp_path / "nopin"))
+    store.dump(tables, "n1")
+    back = store.restore("n1")
+    for t, df in tables.items():
+        assert back[t].count() == df.count()
+
+
+def test_unnamed_dumps_get_distinct_names(spark, tmp_path):
+    """Back-to-back unnamed dumps (many within one second) must each get
+    their own name: a same-second name overwrote the earlier dump, and
+    restoring it returned the later dump's rows."""
+    store = Datastore(spark, str(tmp_path / "unnamed"))
+    names = [store.dump({"t": spark.createDataFrame([(i,)], "v int")})
+             .directory_name for i in range(8)]
+    listed = [d.directory_name for d in store.list_dumps()]
+    assert len(set(names)) == 8 and sorted(listed) == sorted(names)
+    for i, n in enumerate(names):
+        assert [r.v for r in store.restore(n)["t"].collect()] == [i]
 
 
 def test_incremental_full_redump_does_not_duplicate_on_restore(
